@@ -43,13 +43,6 @@ object Stage {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** A fresh stage-root subdirectory path for writers that manage their
-    * own format (bucketed tables, sidecars) — same root/lifecycle as
-    * [[table]] stages, no write performed here.
-    */
-  def dirFor(spark: org.apache.spark.sql.SparkSession, name: String): String =
-    s"${rootFor(spark)}/$name-${seq.incrementAndGet()}"
-
   /** Materialize `df` as a written parquet table; return a scan of it. */
   def table(df: DataFrame, name: String): DataFrame =
     tableWithPath(df, name)._1

@@ -18,6 +18,18 @@ object MigrationQueries {
     */
   private def createdInode = lit(SyntheticShares.CreatedInodeOffset) + col("id")
 
+  /** The share table as a snapshot log: v0 written key-clustered into 8
+    * files, v1 = the m09 changeset merged copy-on-write. Built once per
+    * run and shared by m11, m12, m14, m16, m19 and m20.
+    */
+  private def mergedSnapshot(s: SparkSession, d: String): String =
+    Stage.sharedDir(s, "m12_snap", d) { out =>
+      import graft.operators.SnapshotLog
+      val shares = SyntheticShares.shares(Tables.orders(s, d))
+      SnapshotLog.init(s, out, shares, "id", numFiles = 8)
+      SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
+    }
+
   /** The resolved pipeline, WRITTEN as a stage table before the side-output
     * projections branch off it. Without the barrier, Catalyst's projection
     * collapse inlines the decision-dependent regex trees (dirname /
@@ -317,27 +329,20 @@ object MigrationQueries {
 
     // Copy-on-write parquet keyed MERGE (m11) — the lakehouse sink: the
     // SAME changeset as m09 applied to the share table stored AS PARQUET
-    // FILES, where the merge plans affected files from footer key
-    // min/max, rewrites only those, carries every other file over by
-    // rename (byte-identical), and admits inserts against a key-column
-    // scan of only the files that could hold them
-    // ([[graft.operators.CowMerge]]). The oracle is m09's DuckDB MERGE
-    // twin verbatim, so the on-disk table is certified hash-equal to the
-    // functional merge; CowMergeSpec pins the physical facts (untouched
-    // files byte-identical, rewrite count = key footprint). The base is
-    // written range-clustered by id ([[CowMerge.writeKeyed]]) — the
-    // layout whose narrow footers make planning prune; this fixture's
-    // changeset touches every file (updates hit every 5th id), so the
-    // narrow-footprint path is CowMergeSpec's job, and this entry
-    // certifies SEMANTICS at full footprint.
+    // FILES under the snapshot log ([[mergedSnapshot]]): the merge plans
+    // affected files from their key min/max, rewrites only those, keeps
+    // every other file referenced by the new manifest (byte-identical),
+    // and admits inserts against a key-column scan of only the files that
+    // could hold them. The oracle is m09's DuckDB MERGE twin verbatim, so
+    // the latest version is certified hash-equal to the functional merge;
+    // CowMergeSpec pins the physical facts (untouched files byte-
+    // identical, rewrite count = key footprint). This fixture's changeset
+    // touches every file (updates hit every 5th id), so the narrow-
+    // footprint path is CowMergeSpec's job, and this entry certifies
+    // SEMANTICS at full footprint.
     Q("m11_cow_merge", Merge0.keyedMergeSql) { (s, d) =>
-      import graft.operators.{CowMerge, Stage}
-      val dir = Stage.sharedDir(s, "m11_cow", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        CowMerge.writeKeyed(shares, "id", numFiles = 8, out)
-        CowMerge.execute(s, out, Merge0.changeset(shares), "id")
-      }
-      s.read.parquet(dir)
+      import graft.operators.SnapshotLog
+      SnapshotLog.readLatest(s, mergedSnapshot(s, d))
         .select("id", "share_type", "uid_owner", "item_type", "item_source",
           "item_target", "file_source", "file_target")
         .orderBy("id")
@@ -360,12 +365,8 @@ object MigrationQueries {
     // hash. Time travel (v0 still byte-readable after the merge),
     // commit-race exclusivity, and vacuum are SnapshotLogSpec's.
     Q("m12_snapshot_cdc", Merge0.snapshotCdcSql) { (s, d) =>
-      import graft.operators.{SnapshotLog, Stage}
-      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-      }
+      import graft.operators.SnapshotLog
+      val dir = mergedSnapshot(s, d)
       SnapshotLog.cdc(s, dir, 0L, 1L, "id")
         .select("op", "id", "share_type", "uid_owner", "item_type",
           "item_source", "item_target", "file_source", "file_target")
@@ -416,12 +417,8 @@ object MigrationQueries {
     // contribute exactly nothing. Group-moving updates, emptied groups,
     // chained deltas, and the MoR-delete path are IncrementalViewSpec's.
     Q("m14_incremental_view", Merge0.incViewSql) { (s, d) =>
-      import graft.operators.{IncrementalView, SnapshotLog, Stage}
-      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-      }
+      import graft.operators.{IncrementalView, SnapshotLog}
+      val dir = mergedSnapshot(s, d)
       val measures = Seq(
         "sum_fs" -> col("file_source"),
         "sum_ftl" -> length(col("file_target")).cast("long"))
@@ -476,12 +473,8 @@ object MigrationQueries {
          |       item_target, file_source, file_target
          |FROM merged WHERE id IN (SELECT id FROM shares WHERE id % 97 = 0)
          |ORDER BY id""".stripMargin) { (s, d) =>
-      import graft.operators.{SnapshotLog, Stage}
-      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-      }
+      import graft.operators.SnapshotLog
+      val dir = mergedSnapshot(s, d)
       val probes = SyntheticShares.shares(Tables.orders(s, d))
         .where(col("id") % 97 === 0).select("id")
       SnapshotLog.lookupKeys(s, dir, 1L, probes)
@@ -577,13 +570,9 @@ object MigrationQueries {
     // replays the full feed. Restart/replay/vacuum-gap semantics are
     // SnapshotStreamSourceSpec's.
     Q("m19_stream_cdc_fold", Merge0.incViewSql) { (s, d) =>
-      import graft.operators.{IncrementalView, SnapshotLog, Stage}
+      import graft.operators.{IncrementalView, SnapshotLog}
       import graft.streaming.SnapshotStreams
-      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-      }
+      val dir = mergedSnapshot(s, d)
       val ckpt = java.nio.file.Files.createTempDirectory("m19_ckpt").toString
       var deltas = Vector.empty[DataFrame]
       val q = SnapshotStreams.readChanges(s, dir, "id") { (signed, _, _) =>
@@ -622,12 +611,8 @@ object MigrationQueries {
          |       item_target, file_source, file_target
          |FROM merged WHERE id <= (SELECT MAX(id) FROM shares) // 20
          |ORDER BY id""".stripMargin) { (s, d) =>
-      import graft.operators.{SnapshotLog, Stage}
-      val dir = Stage.sharedDir(s, "m12_snap", d) { out =>
-        val shares = SyntheticShares.shares(Tables.orders(s, d))
-        SnapshotLog.init(s, out, shares, "id", numFiles = 8)
-        SnapshotLog.merge(s, out, Merge0.changeset(shares), "id")
-      }
+      import graft.operators.SnapshotLog
+      val dir = mergedSnapshot(s, d)
       val cut = SyntheticShares.shares(Tables.orders(s, d))
         .agg(max(col("id"))).head().getLong(0) / 20L
       SnapshotLog.read(s, dir, 1L).where(col("id") <= cut)

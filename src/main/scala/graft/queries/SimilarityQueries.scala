@@ -197,9 +197,10 @@ object SimilarityQueries {
     * ranking, so the union of per-partition top-k is a superset of the
     * global top-k. This is the justified `mapPartitions` case: a bounded
     * imperative accumulator Spark's aggregate operators can't express
-    * without shuffling untruncated per-partition lists.
+    * without shuffling untruncated per-partition lists. Used by the
+    * v07/v08 shortlist and re-rank ([[rerankAndRecall]]).
     */
-  private def partialTopK(scored: Dataset[ScoredNeighbor], k: Int): Dataset[ScoredNeighbor] = {
+  private[graft] def partialTopK(scored: Dataset[ScoredNeighbor], k: Int): Dataset[ScoredNeighbor] = {
     // PriorityQueue dequeues its MAX: order so the max is the WORST entry
     // (lowest cosine, then highest vec_id) — the one to evict.
     val worstFirst: Ordering[ScoredNeighbor] =
@@ -221,36 +222,15 @@ object SimilarityQueries {
     }(Encoders.product[ScoredNeighbor])
   }
 
-  /** Reduce-strategy switch for the bounded per-probe top-k, both ending
-    * in the same exact rank (identical results by construction; pinned by
-    * SimilaritySpec's parity test):
-    *
-    *  - `window` (default): feed the FULL scored set into
-    *    `row_number() <= k`. Spark >= 3.5 plans WindowGroupLimit(Partial)
-    *    BEFORE the probe_id exchange, so each map partition ships at most
-    *    k rows per probe — the same bounded-shuffle shape as the heap,
-    *    without leaving columnar/codegen execution for a Scala
-    *    mapPartitions (no encoder round-trip per scored row).
-    *  - `heap`: the explicit mapPartitions bounded heap ([[partialTopK]]),
-    *    kept as the measured fallback and for the k x partitions
-    *    pre-shuffle shape PqSpec's shortlist reuses.
-    *
-    * Measured at sf0.1 (min of 3 passes, v01+v02+v04+v06 total, two
-    * repeats each): window 1.64/1.67 s vs heap 1.75/1.75 s — the builtin
-    * wins ~5% on every query in the family; at larger row counts the
-    * per-scored-row encoder round-trip only the heap pays grows with N,
-    * so `window` is the default. Override for measurement via
-    * `spark.graft.topk.impl` or SPARK_GRAFT_TOPK.
-    */
-  private def useHeapTopK(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.topk.impl")
-      .orElse(sys.env.get("SPARK_GRAFT_TOPK"))
-      .contains("heap")
-
   /** Score the joined (vectors x broadcast probes) frame and reduce it
-    * to the exact per-probe top-k — partial group limit before the
-    * shuffle (WindowGroupLimit or heap, see [[useHeapTopK]]), exact rank
-    * after — the shared tail of v01/v02/v04/v06.
+    * to the exact per-probe top-k — the shared tail of v01/v02/v04/v06.
+    * The full scored set feeds `row_number() <= k`: Spark plans
+    * WindowGroupLimit(Partial) BEFORE the probe_id exchange, so each map
+    * partition ships at most k rows per probe, without leaving
+    * columnar/codegen execution. Measured at sf0.1 (min of 3 passes,
+    * v01+v02+v04+v06 total, two repeats each) against the [[partialTopK]]
+    * heap as the pre-shuffle reduce: 1.64/1.67 s vs 1.75/1.75 s, and the
+    * heap's per-scored-row encoder round-trip grows with N.
     */
   private[graft] def scoreAndRank(joined: DataFrame): DataFrame = {
     val scored = joined
@@ -258,13 +238,9 @@ object SimilarityQueries {
       .select(col("probe_id"), col("vec_id"),
         (GraftNative.longDot(col("p_q"), col("q")).cast("double") /
           sqrt((col("p_n2") * col("n2")).cast("double"))).as("cosine"))
-      .as[ScoredNeighbor](Encoders.product[ScoredNeighbor])
     val w = Window.partitionBy("probe_id")
       .orderBy(col("cosine").desc, col("vec_id"))
-    val pre =
-      if (useHeapTopK(joined.sparkSession)) partialTopK(scored, K).toDF()
-      else scored.toDF()
-    pre
+    scored
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= K)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("rnk"), col("cosine"))

@@ -70,7 +70,7 @@ object ProfileQuery {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       lastSec = (System.nanoTime() - t0) / 1e9
     }
-    Thread.sleep(500) // let the listener bus drain the final JobEnd events
+    org.apache.spark.sql.graftshim.CatalystBridge.drainListeners(spark.sparkContext)
     spark.stop()
     import scala.jdk.CollectionConverters._
     val recs = jobs.values.asScala.toSeq.filter(_.ended > 0)

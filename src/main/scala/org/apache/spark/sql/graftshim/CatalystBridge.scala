@@ -37,6 +37,13 @@ object CatalystBridge {
   def confOf(sc: org.apache.spark.util.SerializableConfiguration)
       : org.apache.hadoop.conf.Configuration = sc.value
 
+  /** Block until the listener bus (`private[spark]`) has delivered every
+    * event posted so far — a deterministic drain for listeners read after
+    * a query; a fixed sleep races the last, largest job's events.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Driver-built, executor-serializable parquet row reader over one
     * schema — the READ-side mirror of [[graft.streaming.SnapshotStreamingWrite]]'s
     * `prepareWrite` use: Spark's own [[org.apache.spark.sql.execution

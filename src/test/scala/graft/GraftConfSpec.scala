@@ -66,4 +66,23 @@ class GraftConfSpec extends SparkTestBase {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
   }
+
+  test("the spark.graft.* option surface is exactly the pinned key set") {
+    // every complete "spark.graft.<key>" literal in the main sources; the
+    // CLI flags GraftConf builds from its bare Prefix are the reference's
+    // deployment flags and stay outside this list. A new knob must show
+    // up here as an edit, in the change that adds it.
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root, not ${root.getAbsolutePath}")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val literal = "\"spark\\.graft\\.([A-Za-z0-9_.]+)\"".r
+    val keys = sources(root).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      literal.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(keys == Set("bloomIndex", "catalog.location", "compactTargetBytes",
+      "dedupTtl", "maxBroadcastBytes", "shuffle.bucketChars", "stageDir"))
+  }
 }

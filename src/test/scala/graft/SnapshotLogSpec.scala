@@ -454,22 +454,16 @@ class SnapshotLogSpec extends SparkTestBase {
   }
 
   test("merge-source materialization: non-deterministic changesets persist, " +
-      "deterministic ones don't, conf overrides both ways") {
+      "deterministic ones don't") {
     import spark.implicits._
     val det = Seq(("insert", 1L, "a")).toDF("op", "id", "x")
     val nondet = det.withColumn("x",
       concat(lit("r"), (rand() * 10).cast("long").cast("string")))
-    assert(!SnapshotLog.shouldMaterialize(spark, det),
+    assert(!SnapshotLog.shouldMaterialize(det),
       "a deterministic changeset must not pay the cache pass")
-    assert(SnapshotLog.shouldMaterialize(spark, nondet),
+    assert(SnapshotLog.shouldMaterialize(nondet),
       "a non-deterministic changeset MUST materialize: the planned " +
         "footprint and the written rows would otherwise draw independently")
-    try {
-      spark.conf.set("spark.graft.mergeMaterialize", "true")
-      assert(SnapshotLog.shouldMaterialize(spark, det))
-      spark.conf.set("spark.graft.mergeMaterialize", "false")
-      assert(!SnapshotLog.shouldMaterialize(spark, nondet))
-    } finally spark.conf.unset("spark.graft.mergeMaterialize")
     // end-to-end: a rand()-routed changeset merges into a consistent
     // table (row count conserved, every key present exactly once)
     val dir = java.nio.file.Files.createTempDirectory("mat").toString + "/t"
